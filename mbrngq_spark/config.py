@@ -108,9 +108,13 @@ def bounded_shuffle(spark: SparkSession, n: int = 8):
 def spread_small_input(df, min_parts: int | None = None):
     """Round-robin-repartition ``df`` ONLY when its scan parallelism is
     below the session's core count (a tiny table often arrives as one
-    file split, serializing every map-side kernel downstream). Large
-    inputs — the 100 TB case — already scan with thousands of splits and
-    are returned untouched: no corpus-sized shuffle is ever added."""
+    file split, serializing every map-side kernel downstream). Inputs
+    that scan with at least that many splits — typical at 100 TB — are
+    returned untouched. The gate is split count, not size: a LARGE input
+    read from fewer splits than the core count (a few huge files on a
+    wide cluster) does get a full round-robin shuffle, and
+    ``df.rdd.getNumPartitions()`` plans the input physically on every
+    call."""
     n = min_parts or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < n:
         return df.repartition(n)

@@ -11,7 +11,6 @@ Reference semantics (file:line into /root/reference):
 - MINDIST rect→rect (0 on overlap):             mbR-NGQ/Data/Rectangle.cs:273-286
 - intersects / contains interval tests:         mbR-NGQ/Data/Rectangle.cs:187-239
 - MAXDIST point→rect via farthest corner:       mbR-NGQ/Data/RTree.cs:821-840
-- MBR diagonal:                                 mbR-NGQ/Data/RTree.cs:888-896
 - NGQ group score  minDist = innerDist(max pairwise) + interDist(min to q):
                                                 mbR-NGQ/Data/RTree.cs:938-966
 The reference's ``Rectangle.furthestDistance`` (Rectangle.cs:315-327) is
@@ -80,11 +79,6 @@ def point_in_rect(px: Column, py: Column,
                   xmin: Column, ymin: Column, xmax: Column, ymax: Column) -> Column:
     """Containment of a point (degenerate rect) — the range-query leaf test."""
     return (px >= xmin) & (px <= xmax) & (py >= ymin) & (py <= ymax)
-
-
-def diagonal(xmin: Column, ymin: Column, xmax: Column, ymax: Column) -> Column:
-    """MBR diagonal length (RTree.cs:888-896)."""
-    return dist_point(xmin, ymin, xmax, ymax)
 
 
 # ---------------------------------------------------------------------------

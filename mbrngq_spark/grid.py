@@ -114,17 +114,6 @@ def cell_iy(cell: Column) -> Column:
     return _compact_bits(F.shiftright(cell, 1))
 
 
-def cell_box(cell: Column, res: int, cfg: EngineConfig = DEFAULT) -> list[Column]:
-    """Decode a cell id to its [xmin, ymin, xmax, ymax] box columns."""
-    n = float(1 << res)
-    wx, wy = cfg.width / n, cfg.height / n
-    ix = cell_ix(cell).cast("double")
-    iy = cell_iy(cell).cast("double")
-    xmin = F.lit(cfg.min_x) + ix * F.lit(wx)
-    ymin = F.lit(cfg.min_y) + iy * F.lit(wy)
-    return [xmin, ymin, xmin + F.lit(wx), ymin + F.lit(wy)]
-
-
 def row_major_tile_id(x: Column, y: Column, res: int,
                       cfg: EngineConfig = DEFAULT) -> Column:
     """Row-major tile id (iy * 2^res + ix) — the raster-tile layer

@@ -15,11 +15,9 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from mbrngq_spark.config import DEFAULT, EngineConfig
 from mbrngq_spark.functions import derive
-from mbrngq_spark import grid
 
 CFG: EngineConfig = DEFAULT
 
@@ -209,7 +207,3 @@ def load_docs_geo(spark: SparkSession, sf_dir: str,
                   cfg: EngineConfig = CFG) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return derive.with_geometry(docs, cfg).select("doc_id", "x", "y", "category")
-
-
-def tile_id_col():
-    return grid.row_major_tile_id(F.col("x"), F.col("y"), TILE_RES, CFG)

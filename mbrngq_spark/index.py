@@ -18,9 +18,12 @@ mbR-NGQ/Data/RTree.cs:254-350,2156-2662) with one batch pass:
 The ``spans`` payload column rides along untouched; ``span_ck`` lets every
 later stage assert the sequence survived (input_hint invariant).
 
-At 100 TB: the only shuffle is the partitionBy write (which AQE balances);
-stats are a bounded-size aggregate (≤ 4^res rows). Hot-cell detection reads
-the stats table, never the raw data twice.
+At 100 TB: the only row shuffle is the partitionBy write (which AQE
+balances); stats are a bounded-size aggregate (≤ 4^res rows). Hot-cell
+detection is a SECOND scan of the raw data: ``build_index`` runs an eager
+counts-only aggregate over the corpus when it is called (even if the
+caller never materializes the index), so the returned plan knows whether
+a hot-cell join is needed at all.
 """
 
 from __future__ import annotations

@@ -45,7 +45,8 @@ def distance_join(docs_a: DataFrame, docs_b: DataFrame, eps: float,
 
     ``self_join=True`` joins a table with itself and returns each unordered
     pair once (a_id < b_id). Inputs carry (id_col, x, y)."""
-    res = res or eps_join_res(eps, cfg)
+    if res is None:
+        res = eps_join_res(eps, cfg)
     n = 1 << res
 
     a = (docs_a.select(F.col(id_col).alias("a_id"),

@@ -24,11 +24,11 @@ The same exact-bounds machinery powers the whole spherical tier:
 cell-PAIR candidate table — the planar 3×3 neighborhood is wrong on a
 lat/lon grid), ``geodetic_nearest_group`` (the flagship NGQ with the
 haversine metric), and ``geodetic_point_in_polygon`` (wrap-normalized
-PNPOLY). Every planner has a DRIVER-planned path (pandas queries,
-candidates broadcast) and a DISTRIBUTED twin (queries/probe cells stay
-DataFrames; planning runs per Arrow batch in mapInPandas with the
-≤ 4^res-row stats broadcast as slim numpy arrays) — equality-pytested
-against each other.
+PNPOLY). Every kNN/range/pair/NGQ query has ONE path: the ≤ 4^res-row
+counts table is collected, the driver plans candidate cells (or cell
+pairs) over pandas queries, and the plan is broadcast into the docs
+join. ``geodetic_point_in_polygon_distributed`` takes a polygon
+DataFrame of any size (polygon covers are joined, not planned).
 
 Distances are rounded to 2 dp (centimeter grain) BEFORE ranking: sin/
 cos/asin differ by ~1 ulp across libms, which is ~1e-8 m at earth
@@ -162,8 +162,7 @@ def plan_geo_cells(stats: pd.DataFrame, queries: pd.DataFrame, k: int,
     Fully vectorized over queries (the planar planner's discipline):
     one lock-step binary search over the SAT for all queries at once,
     then one (Q, C) bounds matrix — no per-query Python loop, so large
-    query batches plan at NumPy speed (and the whole planner can run per
-    Arrow batch inside mapInPandas for distributed Q).
+    query batches plan at NumPy speed.
 
     ``max_dist_m`` (the radius-capped kNN contract — the spherical twin
     of the planar furthestDistance cap, RTree.cs:454-474) clamps every
@@ -319,8 +318,7 @@ def plan_geo_range_cells(stats: pd.DataFrame, queries: pd.DataFrame,
                          radius_m: float, res: int) -> pd.DataFrame:
     """Range-query planner: (query_id, cell) pairs for every non-empty
     cell whose EXACT rect MINDIST ≤ radius (+ rounding half-grain) —
-    one (Q, C) bounds matrix, no per-query loop. Shared verbatim by the
-    driver-planned and distributed paths."""
+    one (Q, C) bounds matrix, no per-query loop."""
     n = 1 << res
     dlat, dlon = 180.0 / n, 360.0 / n
     cells = stats["cell"].to_numpy(np.int64)
@@ -363,94 +361,6 @@ def geodetic_range(spark: SparkSession, docs_ll: DataFrame,
             .withColumn("dist_m", dist)
             .filter(F.col("dist_m") <= radius_m)
             .select("query_id", id_col, "dist_m"))
-
-
-def geodetic_range_distributed(spark: SparkSession, docs_ll: DataFrame,
-                               queries_df: DataFrame, radius_m: float,
-                               res: int = 6,
-                               id_col: str = "doc_id") -> DataFrame:
-    """geodetic_range for LARGE query batches (r4 verdict item 4):
-    queries stay a Spark DataFrame end-to-end — plan_geo_range_cells
-    runs per Arrow batch inside mapInPandas with the (≤ 4^res-row)
-    counts table broadcast as slim numpy arrays (the
-    plan_geo_cells_distributed discipline); the candidate pairs join
-    docs by cell and queries re-join by query_id, both keyed shuffles
-    bounded by |candidates|. Same result contract as geodetic_range
-    (pytest asserts equality at 10k+ queries)."""
-    d = docs_ll.withColumn("cell", geo_cell_col(res))
-    with bounded_shuffle(spark):
-        stats = d.groupBy("cell").count().toPandas()
-    bc = spark.sparkContext.broadcast(
-        {c: stats[c].to_numpy() for c in ("cell", "count")})
-
-    def plan_batches(batches):
-        st = pd.DataFrame(dict(bc.value))
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = plan_geo_range_cells(st, pdf, radius_m, res)
-            if len(out):
-                yield out.astype({"query_id": "int64", "cell": "int64"})
-
-    cand = (queries_df.select("query_id", "qlat", "qlon")
-            .mapInPandas(plan_batches, schema="query_id long, cell long"))
-    dist = F.round(haversine_col(F.col("lat"), F.col("lon"),
-                                 F.col("qlat"), F.col("qlon")), 2)
-    return (d.join(cand, "cell")
-            .join(queries_df.select("query_id", "qlat", "qlon"), "query_id")
-            .withColumn("dist_m", dist)
-            .filter(F.col("dist_m") <= radius_m)
-            .select("query_id", id_col, "dist_m"))
-
-
-def plan_geo_cells_distributed(spark: SparkSession, stats: pd.DataFrame,
-                               queries_df: DataFrame, k: int,
-                               res: int) -> DataFrame:
-    """Large-Q geodetic planner: plan_geo_cells per Arrow batch inside
-    mapInPandas over a DISTRIBUTED query table, the (≤ 4^res-row)
-    counts table broadcast as slim numpy arrays (the planar
-    plan_cells_distributed discipline — no driver loop, no pandas-pickle
-    per-task unpickle floor)."""
-    bc = spark.sparkContext.broadcast(
-        {c: stats[c].to_numpy() for c in ("cell", "count")})
-
-    def plan_batches(batches):
-        st = pd.DataFrame(dict(bc.value))
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = plan_geo_cells(st, pdf, k, res)
-            if len(out):
-                yield out.astype({"query_id": "int64", "cell": "int64"})
-
-    return (queries_df.select("query_id", "qlat", "qlon")
-            .mapInPandas(plan_batches, schema="query_id long, cell long"))
-
-
-def geodetic_knn_distributed(spark: SparkSession, docs_ll: DataFrame,
-                             queries_df: DataFrame, k: int = 10,
-                             res: int = 6,
-                             id_col: str = "doc_id") -> DataFrame:
-    """geodetic_knn for LARGE query batches: queries stay a Spark
-    DataFrame end-to-end — planning runs on executors, the candidate
-    pairs join docs by cell, queries re-join by query_id (both keyed
-    shuffles bounded by |candidates|). Same result contract as
-    geodetic_knn (pytest asserts equality)."""
-    d = docs_ll.withColumn("cell", geo_cell_col(res))
-    with bounded_shuffle(spark):
-        stats = d.groupBy("cell").count().toPandas()
-    cand = plan_geo_cells_distributed(spark, stats, queries_df, k, res)
-    dist = F.round(haversine_col(F.col("lat"), F.col("lon"),
-                                 F.col("qlat"), F.col("qlon")), 2)
-    w = Window.partitionBy("query_id").orderBy(F.col("dist_m").asc(),
-                                               F.col(id_col).asc())
-    return (d.join(cand, "cell")
-            .join(queries_df.select("query_id", "qlat", "qlon"), "query_id")
-            .withColumn("dist_m", dist)
-            .withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", id_col, "dist_m",
-                    F.col("rnk").cast("long").alias("rnk")))
 
 
 def _geo_group_refine(m: int, k: int, id_col: str = "doc_id"):
@@ -600,35 +510,31 @@ def geodetic_nearest_group_bruteforce(spark: SparkSession,
                                   "members string, min_dist double"))
 
 
-def plan_geo_pair_cells(probe_cells: np.ndarray, all_cells: np.ndarray,
-                        eps_m: float, res: int) -> pd.DataFrame:
-    """ε-join cell-pair planner: every ordered (ca, cb) pair of
-    (probe × all) non-empty cells whose rect-to-rect great-circle lower
-    bound ≤ eps. The bound is the probe-cell-CENTER-to-target-rect exact
-    MINDIST padded by the EXACT max distance from the probe center to
-    any point of its own cell (the [1] bound applied to the cell
-    itself), so mind − pad lower-bounds the true rect-to-rect distance —
-    lossless, pole- and wrap-safe. (r4 used the full corner-to-corner
-    diagonal as the pad — still lossless but ~2× looser.) Shared by the
-    driver path (probe = all) and the distributed planner (probe = one
-    Arrow batch)."""
+def plan_geo_pair_cells(cells: np.ndarray, eps_m: float,
+                        res: int) -> pd.DataFrame:
+    """ε-join cell-pair planner: every ordered (ca, cb) pair of non-empty
+    cells whose rect-to-rect great-circle lower bound ≤ eps. The bound
+    is the ca-CENTER-to-cb-rect exact MINDIST padded by the EXACT max
+    distance from the ca center to any point of its own cell (the [1]
+    bound applied to the cell itself), so mind − pad lower-bounds the
+    true rect-to-rect distance — lossless, pole- and wrap-safe. (r4 used
+    the full corner-to-corner diagonal as the pad — still lossless but
+    ~2× looser.)"""
     n = 1 << res
     dlat, dlon = 180.0 / n, 360.0 / n
-    if len(probe_cells) == 0 or len(all_cells) == 0:
+    if len(cells) == 0:
         return pd.DataFrame({"ca": [], "cb": []})
-    plat0 = -90.0 + (probe_cells // n) * dlat
-    plon0 = -180.0 + (probe_cells % n) * dlon
-    alat0 = -90.0 + (all_cells // n) * dlat
-    alon0 = -180.0 + (all_cells % n) * dlon
+    lat0 = -90.0 + (cells // n) * dlat
+    lon0 = -180.0 + (cells % n) * dlon
     mind, _ = _rect_haversine_bounds(
-        plat0[:, None] + dlat / 2, plon0[:, None] + dlon / 2,
-        alat0[None, :], alat0[None, :] + dlat,
-        alon0[None, :], alon0[None, :] + dlon)
+        lat0[:, None] + dlat / 2, lon0[:, None] + dlon / 2,
+        lat0[None, :], lat0[None, :] + dlat,
+        lon0[None, :], lon0[None, :] + dlon)
     _, self_max = _rect_haversine_bounds(
-        plat0 + dlat / 2, plon0 + dlon / 2,
-        plat0, plat0 + dlat, plon0, plon0 + dlon)
+        lat0 + dlat / 2, lon0 + dlon / 2,
+        lat0, lat0 + dlat, lon0, lon0 + dlon)
     ci, cj = np.nonzero(mind <= eps_m + self_max[:, None] + _ROUND_PAD_M)
-    return pd.DataFrame({"ca": probe_cells[ci], "cb": all_cells[cj]})
+    return pd.DataFrame({"ca": cells[ci], "cb": cells[cj]})
 
 
 def geodetic_pairs(spark: SparkSession, docs_ll: DataFrame, eps_m: float,
@@ -651,8 +557,7 @@ def geodetic_pairs(spark: SparkSession, docs_ll: DataFrame, eps_m: float,
         return spark.createDataFrame(
             [], "a_id long, b_id long, dist_m double")
     pairs = spark.createDataFrame(
-        plan_geo_pair_cells(stats["cell"].to_numpy(np.int64),
-                            stats["cell"].to_numpy(np.int64), eps_m, res),
+        plan_geo_pair_cells(stats["cell"].to_numpy(np.int64), eps_m, res),
         "ca long, cb long")
     a = d.select(F.col(id_col).alias("a_id"), F.col("lat").alias("alat"),
                  F.col("lon").alias("alon"), F.col("cell").alias("ca"))
@@ -665,90 +570,6 @@ def geodetic_pairs(spark: SparkSession, docs_ll: DataFrame, eps_m: float,
             .filter((F.col("dist_m") <= eps_m)
                     & (F.col("a_id") < F.col("b_id")))
             .select("a_id", "b_id", "dist_m"))
-
-
-def geodetic_pairs_distributed(spark: SparkSession, docs_ll: DataFrame,
-                               eps_m: float, res: int = 5,
-                               id_col: str = "doc_id") -> DataFrame:
-    """geodetic_pairs with the cell-PAIR planning itself distributed
-    (r4 verdict item 4): at fine resolutions the (C × C) bounds matrix
-    outgrows the driver (res 8 → 65k² entries), so plan_geo_pair_cells
-    runs per Arrow batch of PROBE cells inside mapInPandas over the
-    non-empty-cells table, the full cell list broadcast as one slim
-    numpy array. The join shape is identical to geodetic_pairs (both
-    doc sides keyed by cell, pair table joined in); pytest asserts
-    result equality with the driver-planned path."""
-    d = docs_ll.withColumn("cell", geo_cell_col(res))
-    cells_df = d.select("cell").distinct()
-    all_cells = np.sort(np.array(
-        [r.cell for r in cells_df.collect()], dtype=np.int64))
-    if len(all_cells) == 0:
-        return spark.createDataFrame(
-            [], "a_id long, b_id long, dist_m double")
-    bc = spark.sparkContext.broadcast(all_cells)
-
-    def plan_batches(batches):
-        ac = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = plan_geo_pair_cells(
-                pdf["cell"].to_numpy(np.int64), ac, eps_m, res)
-            if len(out):
-                yield out.astype({"ca": "int64", "cb": "int64"})
-
-    pairs = cells_df.repartition(max(2, len(all_cells) // 4096)) \
-        .mapInPandas(plan_batches, schema="ca long, cb long")
-    a = d.select(F.col(id_col).alias("a_id"), F.col("lat").alias("alat"),
-                 F.col("lon").alias("alon"), F.col("cell").alias("ca"))
-    b = d.select(F.col(id_col).alias("b_id"), F.col("lat").alias("blat"),
-                 F.col("lon").alias("blon"), F.col("cell").alias("cb"))
-    dist = F.round(haversine_col(F.col("alat"), F.col("alon"),
-                                 F.col("blat"), F.col("blon")), 2)
-    return (a.join(pairs, "ca").join(b, "cb")
-            .withColumn("dist_m", dist)
-            .filter((F.col("dist_m") <= eps_m)
-                    & (F.col("a_id") < F.col("b_id")))
-            .select("a_id", "b_id", "dist_m"))
-
-
-def geodetic_nearest_group_distributed(spark: SparkSession,
-                                       docs_ll: DataFrame,
-                                       queries_df: DataFrame, m: int,
-                                       k: int = 5, L: int = 8,
-                                       res: int = 5,
-                                       id_col: str = "doc_id") -> DataFrame:
-    """geodetic_nearest_group for LARGE query batches: queries stay a
-    Spark DataFrame end-to-end — the per-category planners run per Arrow
-    batch inside mapInPandas (plan_geo_cells_distributed per category,
-    each category's counts broadcast as slim numpy arrays), candidates
-    join docs by (cell, category), queries re-join by query_id, then the
-    same fixed-L haversine refine. Result contract identical to the
-    driver-planned path (pytest asserts equality)."""
-    d = docs_ll.withColumn("cell", geo_cell_col(res))
-    with bounded_shuffle(spark):
-        stats = d.groupBy("category", "cell").count().toPandas()
-    cands = None
-    for c in range(m):
-        st_c = stats[stats["category"] == c][["cell", "count"]] \
-            .reset_index(drop=True)
-        p = plan_geo_cells_distributed(spark, st_c, queries_df, L, res) \
-            .withColumn("category", F.lit(c).cast("int"))
-        cands = p if cands is None else cands.unionByName(p)
-    dist = F.round(haversine_col(F.col("lat"), F.col("lon"),
-                                 F.col("qlat"), F.col("qlon")), 2)
-    w = Window.partitionBy("query_id", "category") \
-              .orderBy(F.col("dq").asc(), F.col(id_col).asc())
-    topL = (d.join(cands, ["cell", "category"])
-            .join(queries_df.select("query_id", "qlat", "qlon"), "query_id")
-            .withColumn("dq", dist)
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= L)
-            .select("query_id", "category", id_col, "lat", "lon", "dq"))
-    return (topL.repartition(refine_partitions(spark), "query_id").groupBy("query_id")
-            .applyInPandas(_geo_group_refine(m, k, id_col),
-                           schema="query_id long, group_rank long, "
-                                  "members string, min_dist double"))
 
 
 def geodetic_point_in_polygon(docs_ll: DataFrame, polys: pd.DataFrame,

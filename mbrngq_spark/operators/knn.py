@@ -65,22 +65,6 @@ def rollup_stats(stats: pd.DataFrame, from_res: int, to_res: int) -> pd.DataFram
     return out.groupby(keys, as_index=False)["n"].sum()
 
 
-def choose_planner_res(n_per_group: int, k: int, cfg: EngineConfig = DEFAULT,
-                       lo: int = 3, hi: int | None = None) -> int:
-    """Resolution where a cell holds ≈ k docs of one group (category), so
-    the candidate join ships O(k·rings) rows per query instead of whole
-    coarse cells — the analog of the R-tree's bounded node fan-out
-    (maxNodeEntries=10, RTree.cs:72). Cells are computed on the fly from
-    (x, y), so the planner is free to pick any resolution per query batch."""
-    import math
-
-    if hi is None:
-        hi = cfg.planner_base_res
-    target_cells = max(n_per_group / max(k, 1), 1.0)
-    res = round(math.log(target_cells, 4))
-    return max(lo, min(hi, res))
-
-
 _BATCH_WIN = 16          # max window side handled by the batched planner
 _BATCH_CHUNK = 2048      # queries per chunk (bounds the (B, W, W) arrays)
 

@@ -72,7 +72,8 @@ def polyline_distance_join(docs_geo: DataFrame, lines: DataFrame,
 
     ``lines``: DataFrame (line_id, vx: array<double>, vy: array<double>)
     — a distributed table, any size. ``docs_geo``: (id_col, x, y)."""
-    res = res or eps_join_res(radius, cfg)
+    if res is None:
+        res = eps_join_res(radius, cfg)
     n = 1 << res
 
     seg = polyline_segments(lines)
@@ -146,7 +147,9 @@ def segment_crossing_join(tracks: DataFrame, lines: DataFrame,
     tier."""
     from mbrngq_spark.operators.overlay import _orient
 
-    res = res or cfg.index_res
+    if res is None:
+
+        res = cfg.index_res
 
     def q(col, lo, extent):
         return grid.quantize(col, lo, extent, res)

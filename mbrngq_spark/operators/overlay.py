@@ -140,7 +140,8 @@ def polygon_intersects_join(polys_a: DataFrame, polys_b: DataFrame,
     """(a_id, b_id) for every intersecting polygon pair. Inputs carry
     (<id>, vx array<double>, vy array<double>); both tables arbitrary
     size and fully distributed."""
-    res = res or cfg.index_res
+    if res is None:
+        res = cfg.index_res
 
     def cover(df, idc, pre):
         p = (df.select(F.col(idc), F.col("vx").alias(f"{pre}vx"),

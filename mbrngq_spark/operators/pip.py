@@ -79,7 +79,8 @@ def point_in_polygon_join_distributed(docs_geo: DataFrame,
     skew guard; a city-sized cell no longer lands on one reducer).
     Salting a broadcast join is a no-op shape-wise, so it is applied
     only to the shuffle path."""
-    res = res or cfg.index_res
+    if res is None:
+        res = cfg.index_res
 
     def q(col, lo, extent):
         return grid.quantize(col, lo, extent, res)
@@ -145,7 +146,8 @@ def point_in_polygon_join(spark: SparkSession, docs_geo: DataFrame,
     ``polygons``: pandas (poly_id, vx: list[float], vy: list[float]).
     Returns (poly_id, doc_id, x, y) for docs strictly inside each polygon
     (even-odd rule)."""
-    res = res or cfg.index_res
+    if res is None:
+        res = cfg.index_res
     # bbox covers → reuse the rect machinery for the prune phase
     bboxes = pd.DataFrame({
         "rect_id": polygons["poly_id"],

@@ -178,8 +178,7 @@ def train_quality_classifier(docs: DataFrame, iters: int = QC_ITERS,
     map-only projection, checkpointed once; then
 
     * seed sets ≤ ``local_threshold`` rows (labeled data is small by
-      nature — the similarity.py ≤20k k-means sample precedent) collect
-      the n×4 feature matrix ONCE and finish training driver-side —
+      nature) collect the n×4 feature matrix ONCE and finish training driver-side —
       per-iteration Spark scheduling (~1.5 s/round of py4j + job
       overhead) leaves the critical path;
     * larger seed sets iterate distributed: per iteration ONE

@@ -56,7 +56,8 @@ def range_query(spark: SparkSession, docs_geo: DataFrame, rects: pd.DataFrame,
     matching Rectangle.cs:209-219 <= / >= semantics).
 
     Returns (rect_id, doc_id, x, y)."""
-    res = res or cfg.index_res
+    if res is None:
+        res = cfg.index_res
     cover = spark.createDataFrame(covering_cells(rects, res, cfg))
     rects_df = spark.createDataFrame(rects)
     docs_c = with_cell(docs_geo, res, cfg)
@@ -67,12 +68,3 @@ def range_query(spark: SparkSession, docs_geo: DataFrame, rects: pd.DataFrame,
                                        F.col("xmin"), F.col("ymin"),
                                        F.col("xmax"), F.col("ymax")))
             .select("rect_id", id_col, "x", "y"))
-
-
-def rect_join_intersects(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Generic MBR×MBR overlap join on already-celled frames (Q1 for rect
-    inputs). ``a`` carries a_xmin.. columns, ``b`` is the broadcast side."""
-    pred = geom.rect_intersects(
-        F.col("a_xmin"), F.col("a_ymin"), F.col("a_xmax"), F.col("a_ymax"),
-        F.col("b_xmin"), F.col("b_ymin"), F.col("b_xmax"), F.col("b_ymax"))
-    return a.join(F.broadcast(b), pred)

@@ -7,9 +7,14 @@
   (SimHash for vectors). Corpus is bucketed once (map-side arithmetic),
   queries probe their bucket (+ multiprobe neighbors); only candidates get
   exact scoring. Recall < 1 by construction; the baseline is the oracle.
+- ``cosine_topk_ivf`` / ``build_ivf_index`` + ``probe_ivf_index`` —
+  pivot-IVF, in session or persisted as a pivot-partitioned artifact.
 - ``embedding_near_dups`` — cosine near-duplicate pairs via BANDED
   hyperplane LSH (B plane sets × P planes) with a degenerate-bucket cap,
   self-joined per band (dedup tier 'embedding-cosine near-dup').
+
+The cosine top-k paths differ only in how they pick candidates; scoring
+and ranking is one shared tail (``_cosine_topk``).
 """
 
 from __future__ import annotations
@@ -47,17 +52,33 @@ def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int,
     interpreted ArrayAggregate expressions — per-core time dominates)."""
     from mbrngq_spark.config import spread_small_input
 
-    corpus = spread_small_input(corpus)
-    q = queries.select(F.col(q_id_col),
-                       F.col(vec_col).alias("q_vec"),
-                       _norm(F.col(vec_col)).alias("__q_norm"))
+    return _cosine_topk(spread_small_input(corpus),
+                        _query_side(queries, vec_col, q_id_col), None, k,
+                        id_col, vec_col, q_id_col)
+
+
+def _query_side(queries: DataFrame, vec_col: str, q_id_col: str,
+                *extra: Column) -> DataFrame:
+    """The broadcast side of every top-k path: (q_id, q_vec, __q_norm,
+    *extra) — the query norm folded ONCE here, not per candidate row."""
+    return queries.select(F.col(q_id_col), F.col(vec_col).alias("q_vec"),
+                          _norm(F.col(vec_col)).alias("__q_norm"), *extra)
+
+
+def _cosine_topk(corpus: DataFrame, q: DataFrame, on: str | None, k: int,
+                 id_col: str, vec_col: str, q_id_col: str) -> DataFrame:
+    """The one scoring tail: join the broadcast query side ``q`` (from
+    _query_side) to the candidate corpus on ``on`` (None = cross join),
+    exact cosine rounded to 6 dp BEFORE ranking (reproducible across
+    engines), row_number over (cos desc, id asc), keep rnk ≤ k."""
     cos = _dot(F.col(vec_col), F.col("q_vec")) / \
         (_norm(F.col(vec_col)) * F.col("__q_norm"))
-    scored = (corpus.crossJoin(F.broadcast(q))
-              .withColumn("cos", F.round(cos, 6)))
+    bq = F.broadcast(q)
+    joined = corpus.crossJoin(bq) if on is None else corpus.join(bq, on)
     w = Window.partitionBy(q_id_col).orderBy(F.col("cos").desc(),
                                              F.col(id_col).asc())
-    return (scored.withColumn("rnk", F.row_number().over(w))
+    return (joined.withColumn("cos", F.round(cos, 6))
+            .withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") <= k)
             .select(q_id_col, id_col, "cos", "rnk"))
 
@@ -104,29 +125,23 @@ def cosine_topk_lsh(corpus: DataFrame, queries: DataFrame, k: int,
     radius 2 at 8 planes covers ~90% of cos≈0.9 neighbors while probing
     37/256 buckets.
 
-    At 100 TB the corpus is written bucketed/partitioned by this key, so a
-    probe is partition pruning, not a scan."""
+    At 100 TB the corpus would be written partitioned by this key (as
+    build_ivf_index does for IVF lists), so a probe is partition pruning,
+    not a scan."""
     import itertools
 
     planes = _hyperplanes(dim, n_planes, seed)
     c = corpus.withColumn("bucket", _bucket_col(F.col(vec_col), planes))
-    q = queries.withColumn("q_bucket", _bucket_col(F.col(vec_col), planes)) \
-               .select(q_id_col, F.col(vec_col).alias("q_vec"), "q_bucket")
     masks = [0]
     for r in range(1, probe_radius + 1):
         for bits in itertools.combinations(range(n_planes), r):
             masks.append(sum(1 << b for b in bits))
+    q = _query_side(
+        queries.withColumn("q_bucket", _bucket_col(F.col(vec_col), planes)),
+        vec_col, q_id_col, F.col("q_bucket"))
     probes = F.array(*[F.col("q_bucket").bitwiseXOR(F.lit(m)) for m in masks])
     q = q.withColumn("bucket", F.explode(probes))
-    cos = _dot(F.col(vec_col), F.col("q_vec")) / \
-        (_norm(F.col(vec_col)) * _norm(F.col("q_vec")))
-    scored = (c.join(F.broadcast(q), "bucket")
-              .withColumn("cos", F.round(cos, 6)))
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cos").desc(),
-                                             F.col(id_col).asc())
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select(q_id_col, id_col, "cos", "rnk"))
+    return _cosine_topk(c, q, "bucket", k, id_col, vec_col, q_id_col)
 
 
 def _neg_cos_rounded(vec: Column, lit_vec: Column) -> Column:
@@ -145,38 +160,31 @@ def _pivot_structs(vec: Column, pivots: list[tuple[int, list[float]]]) -> Column
         for pid, pv in pivots])
 
 
-def ivf_train_kmeans(corpus: DataFrame, nlist: int = 16, iters: int = 8,
-                     sample: int = 20_000, seed: int = 42,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> list[tuple[int, list[float]]]:
-    """Spherical k-means centroids for IVF list balance (the optional
-    refinement over raw pivot-IVF): a bounded deterministic hash-sample is
-    pulled to the driver (ORDER BY xxhash64(id) LIMIT sample — at any
-    corpus size the driver sees ≤ sample rows) and Lloyd-iterated in NumPy
-    on L2-normalized vectors. Returns (centroid_id, vector) pairs in the
-    shape cosine_topk_ivf expects. Centroids are DERIVED data — the gate
-    oracle keeps using data-resident pivots; k-means quality is
-    pytest-tracked (recall + list balance)."""
-    rows = (corpus.select(vec_col)
-            .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)))
-            .limit(sample).collect())
-    x = np.array([list(r[0]) for r in rows], dtype=np.float64)
-    x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-    rng = np.random.default_rng(seed)
-    cent = x[rng.choice(len(x), size=min(nlist, len(x)), replace=False)]
-    for _ in range(iters):
-        assign = np.argmax(x @ cent.T, axis=1)            # spherical E-step
-        for c in range(len(cent)):
-            members = x[assign == c]
-            if len(members):
-                v = members.sum(axis=0)
-                cent[c] = v / max(np.linalg.norm(v), 1e-12)
-    return [(c, cent[c].tolist()) for c in range(len(cent))]
+def _data_pivots(corpus: DataFrame, nlist: int, id_col: str,
+                 vec_col: str) -> list[tuple[int, list[float]]]:
+    """The IVF list centers: the ``nlist`` lowest-id corpus vectors."""
+    return [(r[0], list(r[1])) for r in
+            corpus.select(id_col, vec_col).orderBy(id_col)
+            .limit(nlist).collect()]
+
+
+def _assign_pivot(vec: Column, pivots: list[tuple[int, list[float]]]
+                  ) -> Column:
+    """The inverted list of ``vec``: its max-cosine pivot id."""
+    return F.array_min(_pivot_structs(vec, pivots))["pid"]
+
+
+def _probe_pivots(vec: Column, pivots: list[tuple[int, list[float]]],
+                  nprobe: int) -> Column:
+    """One row per probed list: the ``nprobe`` max-cosine pivot ids of
+    ``vec`` (exploded, aliased ``pivot``)."""
+    return F.explode(F.transform(
+        F.slice(F.array_sort(_pivot_structs(vec, pivots)), 1, nprobe),
+        lambda s: s["pid"])).alias("pivot")
 
 
 def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, k: int,
                     nlist: int = 16, nprobe: int = 4,
-                    centroids: list[tuple[int, list[float]]] | None = None,
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     q_id_col: str = "q_id") -> DataFrame:
     """IVF (inverted-file) ANN: the third tier next to the exact baseline
@@ -193,36 +201,17 @@ def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, k: int,
                  candidates get exact cosine + window top-k.
 
     At 100 TB the corpus is written partitioned by ``pivot`` (the inverted
-    lists), so a probe is partition pruning — same scale story as the LSH
-    bucket table, but with data-adaptive regions instead of fixed
-    hyperplanes. Pass ``centroids`` (e.g. from ivf_train_kmeans) to swap
-    the default data-resident pivots for trained list centers."""
-    pivots = centroids or [(r[0], list(r[1])) for r in
-                           corpus.select(id_col, vec_col).orderBy(id_col)
-                           .limit(nlist).collect()]
-
-    structs = _pivot_structs(F.col(vec_col), pivots)
-    c = corpus.withColumn("pivot", F.array_min(structs)["pid"])
-    q = (queries
-         .withColumn("probe", F.transform(
-             F.slice(F.array_sort(_pivot_structs(F.col(vec_col), pivots)),
-                     1, nprobe),
-             lambda s: s["pid"]))
-         .select(q_id_col, F.col(vec_col).alias("q_vec"),
-                 F.explode("probe").alias("pivot")))
-    cos = _dot(F.col(vec_col), F.col("q_vec")) / \
-        (_norm(F.col(vec_col)) * _norm(F.col("q_vec")))
-    scored = (c.join(F.broadcast(q), "pivot")
-              .withColumn("cos", F.round(cos, 6)))
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cos").desc(),
-                                             F.col(id_col).asc())
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select(q_id_col, id_col, "cos", "rnk"))
+    lists — ``build_ivf_index``), so a probe is partition pruning — same
+    scale story as the LSH bucket table, but with data-adaptive regions
+    instead of fixed hyperplanes."""
+    pivots = _data_pivots(corpus, nlist, id_col, vec_col)
+    c = corpus.withColumn("pivot", _assign_pivot(F.col(vec_col), pivots))
+    q = _query_side(queries, vec_col, q_id_col,
+                    _probe_pivots(F.col(vec_col), pivots, nprobe))
+    return _cosine_topk(c, q, "pivot", k, id_col, vec_col, q_id_col)
 
 
 def build_ivf_index(corpus: DataFrame, path: str, nlist: int = 16,
-                    centroids: list[tuple[int, list[float]]] | None = None,
                     id_col: str = "vec_id",
                     vec_col: str = "embedding") -> None:
     """Persist the IVF structure as an on-disk artifact (r4 verdict item
@@ -239,11 +228,8 @@ def build_ivf_index(corpus: DataFrame, path: str, nlist: int = 16,
     Build cost: one corpus-wide map (assignment) + one partitioned
     write; no shuffle beyond the writer's own file distribution."""
     spark = corpus.sparkSession
-    pivots = centroids or [(r[0], list(r[1])) for r in
-                           corpus.select(id_col, vec_col).orderBy(id_col)
-                           .limit(nlist).collect()]
-    structs = _pivot_structs(F.col(vec_col), pivots)
-    (corpus.withColumn("pivot", F.array_min(structs)["pid"])
+    pivots = _data_pivots(corpus, nlist, id_col, vec_col)
+    (corpus.withColumn("pivot", _assign_pivot(F.col(vec_col), pivots))
      .write.mode("overwrite").partitionBy("pivot")
      .parquet(f"{path}/lists"))
     (spark.createDataFrame(
@@ -267,152 +253,14 @@ def probe_ivf_index(spark: SparkSession, path: str, queries: DataFrame,
     pivots (pytest asserts equality)."""
     pivots = [(int(r.pid), list(r.pvec)) for r in
               spark.read.parquet(f"{path}/pivots").collect()]
-    q = (queries
-         .withColumn("probe", F.transform(
-             F.slice(F.array_sort(_pivot_structs(F.col(vec_col), pivots)),
-                     1, nprobe),
-             lambda s: s["pid"]))
-         .select(q_id_col, F.col(vec_col).alias("q_vec"),
-                 F.explode("probe").alias("pivot")))
+    q = _query_side(queries, vec_col, q_id_col,
+                    _probe_pivots(F.col(vec_col), pivots, nprobe))
     probed = sorted({int(r.pivot) for r in
                      q.select("pivot").distinct().collect()})
     lists = (spark.read.parquet(f"{path}/lists")
              .filter(F.col("pivot").isin(probed))
              .withColumn("pivot", F.col("pivot").cast("long")))
-    cos = _dot(F.col(vec_col), F.col("q_vec")) / \
-        (_norm(F.col(vec_col)) * _norm(F.col("q_vec")))
-    scored = (lists.join(F.broadcast(q), "pivot")
-              .withColumn("cos", F.round(cos, 6)))
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cos").desc(),
-                                             F.col(id_col).asc())
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select(q_id_col, id_col, "cos", "rnk"))
-
-
-def build_lsh_index(corpus: DataFrame, path: str, dim: int,
-                    n_planes: int = 8, seed: int = 42,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> None:
-    """Persist the hyperplane-LSH structure (the bucket half of the
-    verdict's 'IVF lists / LSH buckets' artifact pair): the corpus with
-    its sign bucket, written partitionBy('bucket') (≤ 2^n_planes
-    directories), plus a 1-row meta table carrying (dim, n_planes,
-    seed) so the probe derives the IDENTICAL hyperplanes. A probe's
-    multiprobe mask set becomes a static ``bucket IN`` partition
-    filter."""
-    spark = corpus.sparkSession
-    planes = _hyperplanes(dim, n_planes, seed)
-    (corpus.withColumn("bucket", _bucket_col(F.col(vec_col), planes))
-     .write.mode("overwrite").partitionBy("bucket")
-     .parquet(f"{path}/buckets"))
-    (spark.createDataFrame([(dim, n_planes, seed)],
-                           "dim int, n_planes int, seed int")
-     .write.mode("overwrite").parquet(f"{path}/meta"))
-
-
-def probe_lsh_index(spark: SparkSession, path: str, queries: DataFrame,
-                    k: int, probe_radius: int = 2, id_col: str = "vec_id",
-                    vec_col: str = "embedding",
-                    q_id_col: str = "q_id") -> DataFrame:
-    """Query the persisted LSH artifact: rebuild the hyperplanes from
-    the meta row, bucket the queries, explode the multiprobe masks, and
-    read ONLY the probed bucket partitions (static ``bucket IN`` filter
-    — ≤ |masks|·|Q| distinct ids, collapsed to ≤ 2^n_planes). Exact
-    scoring + rank; result contract identical to cosine_topk_lsh
-    (pytest asserts equality)."""
-    import itertools
-
-    meta = spark.read.parquet(f"{path}/meta").first()
-    planes = _hyperplanes(int(meta.dim), int(meta.n_planes),
-                          int(meta.seed))
-    masks = [0]
-    for r in range(1, probe_radius + 1):
-        for bits in itertools.combinations(range(int(meta.n_planes)), r):
-            masks.append(sum(1 << b for b in bits))
-    q = (queries
-         .withColumn("q_bucket", _bucket_col(F.col(vec_col), planes))
-         .select(q_id_col, F.col(vec_col).alias("q_vec"),
-                 F.explode(F.array(*[F.col("q_bucket")
-                                     .bitwiseXOR(F.lit(m))
-                                     for m in masks])).alias("bucket")))
-    probed = sorted({int(r.bucket) for r in
-                     q.select("bucket").distinct().collect()})
-    c = (spark.read.parquet(f"{path}/buckets")
-         .filter(F.col("bucket").isin(probed))
-         .withColumn("bucket", F.col("bucket").cast("long")))
-    cos = _dot(F.col(vec_col), F.col("q_vec")) / \
-        (_norm(F.col(vec_col)) * _norm(F.col("q_vec")))
-    scored = (c.join(F.broadcast(q), "bucket")
-              .withColumn("cos", F.round(cos, 6)))
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cos").desc(),
-                                             F.col(id_col).asc())
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select(q_id_col, id_col, "cos", "rnk"))
-
-
-def build_ivf_snapshot(corpus: DataFrame, path: str, nlist: int = 16,
-                       centroids: list[tuple[int, list[float]]]
-                       | None = None,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding"):
-    """The IVF artifact on the engine's own TABLE layer: inverted lists
-    written as a SnapshotTable clustered by ``pivot`` (range+sort write →
-    tight per-file min/max bounds), pivots in a sibling table. The probe
-    reads with ``where=("pivot", "in", probed)`` so manifest-stat file
-    skipping plays the partition-pruning role — and the artifact gains
-    the whole snapshot feature set for free: atomic commits, time travel,
-    CoW delete of vectors, compaction. Returns (lists_table,
-    pivots_used)."""
-    from mbrngq_spark.plans.snapshots import SnapshotTable
-    spark = corpus.sparkSession
-    pivots = centroids or [(r[0], list(r[1])) for r in
-                           corpus.select(id_col, vec_col).orderBy(id_col)
-                           .limit(nlist).collect()]
-    structs = _pivot_structs(F.col(vec_col), pivots)
-    t = SnapshotTable(spark, f"{path}/lists_t")
-    t.create(corpus.withColumn("pivot", F.array_min(structs)["pid"]),
-             cluster_by="pivot", target_files=max(8, len(pivots)))
-    (spark.createDataFrame(
-        pd.DataFrame({"pid": [p for p, _ in pivots],
-                      "pvec": [v for _, v in pivots]}),
-        "pid long, pvec array<double>")
-     .write.mode("overwrite").parquet(f"{path}/pivots"))
-    return t, pivots
-
-
-def probe_ivf_snapshot(spark: SparkSession, path: str, queries: DataFrame,
-                       k: int, nprobe: int = 4, id_col: str = "vec_id",
-                       vec_col: str = "embedding",
-                       q_id_col: str = "q_id") -> DataFrame:
-    """Probe the snapshot-backed IVF artifact: manifest-stat file
-    skipping via the pushed ``pivot IN`` predicate (the table's
-    ``last_scan`` records how many files were skipped — asserted by
-    pytest), then the same broadcast-join + rank as probe_ivf_index."""
-    from mbrngq_spark.plans.snapshots import SnapshotTable
-    pivots = [(int(r.pid), list(r.pvec)) for r in
-              spark.read.parquet(f"{path}/pivots").collect()]
-    q = (queries
-         .withColumn("probe", F.transform(
-             F.slice(F.array_sort(_pivot_structs(F.col(vec_col), pivots)),
-                     1, nprobe),
-             lambda s: s["pid"]))
-         .select(q_id_col, F.col(vec_col).alias("q_vec"),
-                 F.explode("probe").alias("pivot")))
-    probed = sorted({int(r.pivot) for r in
-                     q.select("pivot").distinct().collect()})
-    t = SnapshotTable(spark, f"{path}/lists_t")
-    lists = t.read(where=("pivot", "in", probed))
-    cos = _dot(F.col(vec_col), F.col("q_vec")) / \
-        (_norm(F.col(vec_col)) * _norm(F.col("q_vec")))
-    scored = (lists.join(F.broadcast(q), "pivot")
-              .withColumn("cos", F.round(cos, 6)))
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cos").desc(),
-                                             F.col(id_col).asc())
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select(q_id_col, id_col, "cos", "rnk")), t
+    return _cosine_topk(lists, q, "pivot", k, id_col, vec_col, q_id_col)
 
 
 def _band_buckets_udf(planes: np.ndarray, bands: int):
@@ -489,9 +337,8 @@ def embedding_near_dups(corpus: DataFrame, threshold: float, dim: int,
 # 32× smaller), and query-time distance is an M-term table lookup over
 # the codes — the corpus's raw vectors never leave disk (Jegou et al.,
 # "Product Quantization for Nearest Neighbor Search", TPAMI 2011; the
-# FAISS IVF-PQ scan shape). At 100 TB the ADC scan touches only the
-# code table; combined with the persisted IVF artifact the probe reads
-# a few pruned partitions OF CODES.
+# FAISS PQ scan shape). At 100 TB the ADC scan touches only the code
+# table, never the raw vectors.
 #
 # Cross-engine exactness trick: all PQ arithmetic runs on MICRO-UNIT
 # int64 embeddings — each float component is quantized ONCE, in-engine,
@@ -658,181 +505,3 @@ def pq_adc_sql(table: str = "embeddings", n_queries: int = 4,
                                       ORDER BY adist, vec_id) AS rnk
             FROM adist) WHERE rnk <= {k}
     """
-
-
-def pq_codebook_kmeans(corpus: DataFrame, m: int = PQ_M,
-                       n_codes: int = PQ_C, iters: int = 10,
-                       sample: int = 20_000, seed: int = 42,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> np.ndarray:
-    """Per-subspace Lloyd k-means codebook (the quality refinement over
-    raw pivot-PQ — FAISS's default training): a bounded deterministic
-    hash-sample comes to the driver ALREADY QUANTIZED to micro-units
-    (so rounding stays engine-side), k-means runs per subspace in
-    NumPy, and the learned centroids are re-quantized to int64 so every
-    downstream distance keeps the < 2^53 exactness property. Codebooks
-    are DERIVED data — the gate oracle keeps using data-resident pivots;
-    k-means quality (recall uplift over pivots) is pytest-tracked."""
-    rows = (corpus.select(quantized_vec(F.col(vec_col)).alias("qv"))
-            .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)))
-            .limit(sample).collect())
-    x = np.array([r["qv"] for r in rows], dtype=np.float64)
-    dim = x.shape[1]
-    assert dim % m == 0, (dim, m)
-    dsub = dim // m
-    xs = x.reshape(len(x), m, dsub)
-    rng = np.random.default_rng(seed)
-    out = np.empty((m, n_codes, dsub), dtype=np.int64)
-    for j in range(m):
-        pts = xs[:, j, :]
-        cent = pts[rng.choice(len(pts), size=min(n_codes, len(pts)),
-                              replace=False)].copy()
-        for _ in range(iters):
-            d = ((pts[:, None, :] - cent[None, :, :]) ** 2).sum(-1)
-            assign = d.argmin(1)
-            for c in range(len(cent)):
-                members = pts[assign == c]
-                if len(members):
-                    cent[c] = members.mean(0)
-        out[j] = np.rint(cent).astype(np.int64)
-    return out
-
-
-# --- IVF-PQ: partition-pruned ADC over a code-only artifact -------------------
-
-def build_ivfpq_index(corpus: DataFrame, path: str, nlist: int = 16,
-                      codebooks: np.ndarray | None = None,
-                      pivots: list[tuple[int, list[float]]] | None = None,
-                      id_col: str = "vec_id",
-                      vec_col: str = "embedding") -> None:
-    """The FAISS IVF-PQ shape, persisted (the 100 TB ANN artifact): the
-    inverted lists store ONLY (id, codes) — 8 bytes of PQ payload per
-    vector instead of the raw embedding — partitioned by pivot, so a
-    probe is partition pruning over a table 32× smaller than the
-    ``build_ivf_index`` one. Raw vectors never enter the artifact; the
-    probe never touches the corpus.
-
-    - ``{path}/lists``    — (id, codes) partitionBy("pivot")
-    - ``{path}/pivots``   — (pid, pvec) list-ranking table (nlist rows)
-    - ``{path}/codebook`` — (j, cid, cvec) int64 codewords (m·n_codes
-      rows — metadata scale), so a probe job reconstructs the exact
-      LUTs with no retraining."""
-    spark = corpus.sparkSession
-    cb = codebooks if codebooks is not None else pq_codebook_pivots(
-        corpus, id_col=id_col, vec_col=vec_col)
-    m, n_codes, dsub = cb.shape
-    pivots = pivots or [(r[0], list(r[1])) for r in
-                        corpus.select(id_col, vec_col).orderBy(id_col)
-                        .limit(nlist).collect()]
-    structs = _pivot_structs(F.col(vec_col), pivots)
-    assigned = corpus.withColumn("pivot", F.array_min(structs)["pid"])
-    codes = pq_encode(assigned, cb, id_col=id_col, vec_col=vec_col) \
-        .join(assigned.select(F.col(id_col).alias("id"), "pivot"), "id")
-    codes.write.mode("overwrite").partitionBy("pivot") \
-        .parquet(f"{path}/lists")
-    (spark.createDataFrame(
-        pd.DataFrame({"pid": [p for p, _ in pivots],
-                      "pvec": [v for _, v in pivots]}),
-        "pid long, pvec array<double>")
-     .write.mode("overwrite").parquet(f"{path}/pivots"))
-    (spark.createDataFrame(
-        pd.DataFrame([(j, c, cb[j][c].tolist())
-                      for j in range(m) for c in range(n_codes)],
-                     columns=["j", "cid", "cvec"]),
-        "j long, cid long, cvec array<long>")
-     .write.mode("overwrite").parquet(f"{path}/codebook"))
-
-
-def probe_ivfpq_index(spark: SparkSession, path: str, queries: DataFrame,
-                      k: int, nprobe: int = 4, id_col: str = "vec_id",
-                      vec_col: str = "embedding",
-                      q_id_col: str = "q_id") -> DataFrame:
-    """Probe the IVF-PQ artifact: rank pivots per query (nlist rows),
-    STATIC ``pivot IN`` partition pruning over the code lists, then one
-    map-only Arrow ADC pass per (query, candidate) — integer-exact, so
-    the result equals a driver-side NumPy replay bit-for-bit (pytest).
-    The scan reads nprobe/nlist of a code table 32× smaller than the
-    raw corpus; the only shuffle is the WindowGroupLimit-capped rank."""
-    cbr = spark.read.parquet(f"{path}/codebook").collect()
-    m = 1 + max(r["j"] for r in cbr)
-    n_codes = 1 + max(r["cid"] for r in cbr)
-    dsub = len(cbr[0]["cvec"])
-    cb = np.zeros((m, n_codes, dsub), dtype=np.int64)
-    for r in cbr:
-        cb[r["j"], r["cid"]] = r["cvec"]
-    pivots = [(int(r.pid), list(r.pvec)) for r in
-              spark.read.parquet(f"{path}/pivots").collect()]
-
-    qrows = (queries.select(F.col(q_id_col).alias("qid"),
-                            quantized_vec(F.col(vec_col)).alias("qv"))
-             .collect())
-    qids = np.array(sorted(r["qid"] for r in qrows), dtype=np.int64)
-    qidx = {q: i for i, q in enumerate(qids.tolist())}
-    by_id = {r["qid"]: r["qv"] for r in qrows}
-    luts = np.stack([
-        ((np.array(by_id[q], dtype=np.int64).reshape(m, 1, dsub)
-          - cb) ** 2).sum(-1)
-        for q in qids])                      # (Q, m, n_codes)
-    jdx = np.arange(m)
-
-    q = (queries
-         .withColumn("probe", F.transform(
-             F.slice(F.array_sort(_pivot_structs(F.col(vec_col), pivots)),
-                     1, nprobe),
-             lambda s: s["pid"]))
-         .select(F.col(q_id_col).alias("qid"),
-                 F.explode("probe").alias("pivot")))
-    probed = sorted({int(r.pivot) for r in
-                     q.select("pivot").distinct().collect()})
-    lists = (spark.read.parquet(f"{path}/lists")
-             .filter(F.col("pivot").isin(probed))
-             .withColumn("pivot", F.col("pivot").cast("long")))
-    cand = lists.join(F.broadcast(q), "pivot") \
-                .select("qid", "id", "codes")
-
-    def scan(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cd = np.array(pdf["codes"].tolist(), dtype=np.int64)  # (B, m)
-            qi = pdf["qid"].map(qidx).to_numpy()
-            ad = luts[qi[:, None], jdx[None, :], cd].sum(-1)      # (B,)
-            yield pd.DataFrame({"q_id": pdf["qid"], "vec_id": pdf["id"],
-                                "adist": ad})
-
-    scored = cand.mapInPandas(scan,
-                              schema="q_id long, vec_id long, adist long")
-    w = Window.partitionBy("q_id").orderBy(F.col("adist").asc(),
-                                           F.col("vec_id").asc())
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select(F.col("q_id").alias(q_id_col),
-                    F.col("vec_id").alias(id_col), "adist", "rnk"))
-
-
-def append_ivfpq_index(delta: DataFrame, path: str,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> None:
-    """Incremental maintenance of the IVF-PQ artifact (the I1-append
-    analog for the similarity tier): new vectors are assigned and
-    encoded with the artifact's PERSISTED pivots and codebook — never
-    retrained, so probes over (base build + appends) equal a from-
-    scratch build over the union (pytest) — and appended into the
-    pivot-partitioned lists. One map-only pass over the delta; existing
-    list files are untouched (parquet append into partition dirs)."""
-    spark = delta.sparkSession
-    cbr = spark.read.parquet(f"{path}/codebook").collect()
-    m = 1 + max(r["j"] for r in cbr)
-    n_codes = 1 + max(r["cid"] for r in cbr)
-    dsub = len(cbr[0]["cvec"])
-    cb = np.zeros((m, n_codes, dsub), dtype=np.int64)
-    for r in cbr:
-        cb[r["j"], r["cid"]] = r["cvec"]
-    pivots = [(int(r.pid), list(r.pvec)) for r in
-              spark.read.parquet(f"{path}/pivots").collect()]
-    structs = _pivot_structs(F.col(vec_col), pivots)
-    assigned = delta.withColumn("pivot", F.array_min(structs)["pid"])
-    codes = pq_encode(assigned, cb, id_col=id_col, vec_col=vec_col) \
-        .join(assigned.select(F.col(id_col).alias("id"), "pivot"), "id")
-    codes.write.mode("append").partitionBy("pivot") \
-        .parquet(f"{path}/lists")

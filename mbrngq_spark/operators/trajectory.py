@@ -119,7 +119,9 @@ def colocation_pairs(events_geo: DataFrame, eps: float, tau: int,
     from mbrngq_spark import grid
     from mbrngq_spark.operators.distance_join import eps_join_res
 
-    res = res or eps_join_res(eps, cfg)
+    if res is None:
+
+        res = eps_join_res(eps, cfg)
     n = 1 << res
     base = (events_geo
             .select("user_id", "event_id", "te", "x", "y")

@@ -30,7 +30,8 @@ def with_stream_geometry(stream: DataFrame, id_col: str = "doc_id",
     """Attach (x, y, category, cell) to a streaming frame carrying a string
     ``doc_id`` — same hash-derived geometry as sources/synth.py so streamed
     docs land in the same cells as batch-loaded ones."""
-    res = res or cfg.index_res
+    if res is None:
+        res = cfg.index_res
     did = F.col(id_col)
 
     def u(salt: str) -> F.Column:

@@ -187,9 +187,8 @@ def test_lsh_topk_recall_on_clustered_vectors(spark):
 
 
 def test_ivf_recall_and_kmeans_balance(spark):
-    """IVF on planted clusters: pivot-IVF finds neighbors; k-means-trained
-    centroids (spherical Lloyd on a driver sample) give high recall AND a
-    more balanced list histogram than raw data-resident pivots."""
+    """IVF on planted clusters: pivot-IVF (data-resident list centers)
+    finds neighbors at nprobe=4 of 16 lists."""
     rng = np.random.default_rng(7)
     dim = 32
     centers = rng.standard_normal((40, dim))
@@ -213,16 +212,9 @@ def test_ivf_recall_and_kmeans_balance(spark):
             total += len(e)
         return hits / total
 
-    km = similarity.ivf_train_kmeans(corpus, nlist=16, iters=8, sample=400)
-    got_km = similarity.cosine_topk_ivf(corpus, queries, k=10, nlist=16,
-                                        nprobe=4, centroids=km).toPandas()
-    assert recall(got_km) >= 0.8, "k-means IVF recall too low"
     got_piv = similarity.cosine_topk_ivf(corpus, queries, k=10, nlist=16,
                                          nprobe=4).toPandas()
     assert recall(got_piv) >= 0.5
-    # determinism: same seed → identical centroids
-    km2 = similarity.ivf_train_kmeans(corpus, nlist=16, iters=8, sample=400)
-    assert km == km2
 
 
 def test_embedding_near_dups_self_consistency(spark, emb):
@@ -326,46 +318,6 @@ def test_persisted_ivf_probe_equals_in_session(spark, tmp_path):
     assert "pivot" in tail
 
 
-def test_persisted_ivf_kmeans_centroids_roundtrip(spark, tmp_path):
-    """The artifact also persists TRAINED centroids (negative pids never
-    collide with data ids) and probing stays self-consistent."""
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 3) \
-                 .select(F.col("vec_id").alias("q_id"), "embedding")
-    cents = similarity.ivf_train_kmeans(emb, nlist=8, sample=500)
-    cents = [(-(i + 1), v) for i, (_, v) in enumerate(cents)]
-    path = str(tmp_path / "ivf_km")
-    similarity.build_ivf_index(emb, path, centroids=cents)
-    got = similarity.probe_ivf_index(spark, path, queries, k=5, nprobe=3)
-    exp = similarity.cosine_topk_ivf(emb, queries, k=5, centroids=cents,
-                                     nprobe=3)
-    kg = sorted((r.q_id, r.rnk, r.vec_id, r.cos) for r in got.collect())
-    ke = sorted((r.q_id, r.rnk, r.vec_id, r.cos) for r in exp.collect())
-    assert kg == ke
-
-
-def test_snapshot_ivf_probe_skips_files_and_matches(spark, tmp_path):
-    """The SnapshotTable-backed IVF artifact: clustered write gives tight
-    per-file pivot bounds, the probe's pushed 'pivot IN' predicate skips
-    files via manifest stats (not a full scan), and results equal the
-    in-session IVF path."""
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 4) \
-                 .select(F.col("vec_id").alias("q_id"), "embedding")
-    path = str(tmp_path / "ivf_snap")
-    similarity.build_ivf_snapshot(emb, path, nlist=16)
-    got, t = similarity.probe_ivf_snapshot(spark, path, queries, k=10,
-                                           nprobe=4)
-    kg = sorted((r.q_id, r.rnk, r.vec_id, r.cos) for r in got.collect())
-    exp = similarity.cosine_topk_ivf(emb, queries, k=10, nlist=16, nprobe=4)
-    ke = sorted((r.q_id, r.rnk, r.vec_id, r.cos) for r in exp.collect())
-    assert kg == ke
-    # the probe must have pruned: at nprobe=4/nlist=16 over >=8 clustered
-    # files, some files hold only unprobed pivots
-    assert t.last_scan["skipped"] > 0, t.last_scan
-    assert t.last_scan["files"] >= 8
-
-
 def test_snapshot_in_predicate_row_exactness(spark, tmp_path):
     """The new 'in' pushdown is also a real row filter: values outside
     the probed set never leak through even within kept files."""
@@ -379,26 +331,6 @@ def test_snapshot_in_predicate_row_exactness(spark, tmp_path):
     out = t.read(where=("k", "in", [3, 50, 97]))
     assert sorted(r.k for r in out.collect()) == [3, 50, 97]
     assert t.last_scan["skipped"] > 0
-
-
-def test_persisted_lsh_probe_equals_in_session(spark, tmp_path):
-    """The LSH-bucket artifact answers multiprobe queries identically to
-    cosine_topk_lsh, with the probed mask set pruning the scan to
-    bucket partitions."""
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    dim = len(emb.select("embedding").first()[0])
-    queries = emb.filter(F.col("vec_id") < 4) \
-                 .select(F.col("vec_id").alias("q_id"), "embedding")
-    path = str(tmp_path / "lsh")
-    similarity.build_lsh_index(emb, path, dim=dim)
-    got = similarity.probe_lsh_index(spark, path, queries, k=10)
-    exp = similarity.cosine_topk_lsh(emb, queries, k=10, dim=dim)
-    kg = sorted((r.q_id, r.rnk, r.vec_id, r.cos) for r in got.collect())
-    ke = sorted((r.q_id, r.rnk, r.vec_id, r.cos) for r in exp.collect())
-    assert kg == ke
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "bucket" in plan.split("PartitionFilters", 1)[1][:400]
 
 
 def test_contamination_bloom_prefilter_identical(spark):
@@ -478,27 +410,23 @@ def test_pq_chain_integer_exact_and_deterministic(spark, emb):
 
 
 def test_pq_recall_and_self_hit(spark, emb):
-    """Both codebooks (oracle-replayable pivots, production k-means)
-    hold the same recall floor on the random fixture — random embeddings
-    have no cluster structure for k-means to exploit, so the two are
-    statistically alike here; k-means wins on clustered real data. A
-    corpus row used as its own query must always surface in its top-10
-    (reconstruction error stays below inter-point distances)."""
+    """The oracle-replayable pivot codebook holds a recall floor on the
+    random fixture, and a corpus row used as its own query must always
+    surface in its top-10 (reconstruction error stays below inter-point
+    distances)."""
     queries = emb.filter(F.col("vec_id") < 8) \
         .select(F.col("vec_id").alias("q_id"), "embedding")
     exact = {}
     for r in similarity.cosine_topk_bruteforce(emb, queries, 10).collect():
         exact.setdefault(r["q_id"], set()).add(r["vec_id"])
-    for mk in (similarity.pq_codebook_pivots,
-               similarity.pq_codebook_kmeans):
-        cb = mk(emb)
-        got = {}
-        for r in similarity.pq_adc_topk(
-                similarity.pq_encode(emb, cb), queries, cb, 10).collect():
-            got.setdefault(r["q_id"], set()).add(r["vec_id"])
-        recs = [len(got[q] & exact[q]) / 10 for q in exact]
-        assert sum(recs) / len(recs) >= 0.25, (mk.__name__, recs)
-        assert all(q in got[q] for q in exact), mk.__name__
+    cb = similarity.pq_codebook_pivots(emb)
+    got = {}
+    for r in similarity.pq_adc_topk(
+            similarity.pq_encode(emb, cb), queries, cb, 10).collect():
+        got.setdefault(r["q_id"], set()).add(r["vec_id"])
+    recs = [len(got[q] & exact[q]) / 10 for q in exact]
+    assert sum(recs) / len(recs) >= 0.25, recs
+    assert all(q in got[q] for q in exact)
 
 
 def test_pq_scan_plan_maponly_and_group_limited(spark, emb):
@@ -517,79 +445,3 @@ def test_pq_scan_plan_maponly_and_group_limited(spark, emb):
     # no Exchange may appear below the MapInPandas nodes
     below = plan.split("MapInPandas")[-1]
     assert "Exchange" not in below, below
-
-
-def test_ivfpq_probe_equals_numpy_replay_and_prunes(spark, tmp_path, emb):
-    """IVF-PQ artifact: the probe's top-k equals a from-scratch NumPy
-    replay (LUT ADC over the probed lists' members, integer-exact,
-    (adist, id) tiebreak) — exactness survives the artifact roundtrip —
-    and the list scan is partition-pruned, with the 8-long code payload
-    standing in for the raw vectors."""
-    queries = emb.filter(F.col("vec_id") < 4) \
-                 .select(F.col("vec_id").alias("q_id"), "embedding")
-    path = str(tmp_path / "ivfpq")
-    similarity.build_ivfpq_index(emb, path, nlist=16)
-    got = similarity.probe_ivfpq_index(spark, path, queries, k=10,
-                                       nprobe=4)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    rows = sorted((r.q_id, r.rnk, r.vec_id, r.adist)
-                  for r in got.collect())
-    assert "PartitionFilters" in plan
-    assert "pivot" in plan.split("PartitionFilters", 1)[1][:300]
-
-    # the artifact's own state: assignments, codes, pivots
-    lists = {r["id"]: (int(r["pivot"]), list(r["codes"])) for r in
-             spark.read.parquet(f"{path}/lists").collect()}
-    pivots = [(int(r.pid), list(r.pvec)) for r in
-              spark.read.parquet(f"{path}/pivots").collect()]
-    cb = similarity.pq_codebook_pivots(emb)
-    m, n_codes, dsub = cb.shape
-    # per-query probe sets via the probe's own ranking expression
-    # (nprobe lowest (rounded -cos, pid) structs — nlist rows, metadata)
-    probes = {r["q_id"]: [int(p) for p in r["pr"]] for r in
-              queries.withColumn("pr", F.transform(
-                  F.slice(F.array_sort(similarity._pivot_structs(
-                      F.col("embedding"), pivots)), 1, 4),
-                  lambda st: st["pid"])).select("q_id", "pr").collect()}
-    qv = {r["q_id"]: np.array(r["qv"], dtype=np.int64) for r in
-          queries.select("q_id", similarity.quantized_vec(
-              F.col("embedding")).alias("qv")).collect()}
-    exp = []
-    for q, pset in probes.items():
-        lut = ((qv[q].reshape(m, 1, dsub) - cb) ** 2).sum(-1)
-        cand = [(int(lut[np.arange(m), codes].sum()), i)
-                for i, (p, codes) in lists.items() if p in set(pset)]
-        for rnk, (ad, i) in enumerate(sorted(cand)[:10]):
-            exp.append((q, rnk + 1, i, ad))
-    assert rows == sorted(exp)
-
-
-def test_ivfpq_incremental_append_equals_full_build(spark, tmp_path, emb):
-    """Build on half the corpus, append the other half: probes must
-    equal the from-scratch build over the full corpus — the persisted
-    pivots/codebook make assignment and encoding reproducible, so
-    incremental maintenance never drifts. (Pivots/codebook derive from
-    the 16 lowest-id rows, which are in the base half.)"""
-    base = emb.filter(F.col("vec_id") % 2 == 0)
-    delta = emb.filter(F.col("vec_id") % 2 == 1)
-    queries = emb.filter(F.col("vec_id") < 4) \
-                 .select(F.col("vec_id").alias("q_id"), "embedding")
-    p_inc = str(tmp_path / "inc")
-    similarity.build_ivfpq_index(base, p_inc, nlist=16)
-    similarity.append_ivfpq_index(delta, p_inc)
-    got = sorted((r.q_id, r.rnk, r.vec_id, r.adist) for r in
-                 similarity.probe_ivfpq_index(spark, p_inc, queries,
-                                              k=10, nprobe=4).collect())
-    p_full = str(tmp_path / "full")
-    # full build pinned to the BASE-derived pivots/codebook (incremental
-    # maintenance never retrains; the comparison must hold them fixed)
-    cb = similarity.pq_codebook_pivots(base)
-    pv = [(r[0], list(r[1])) for r in
-          base.select("vec_id", "embedding").orderBy("vec_id")
-          .limit(16).collect()]
-    similarity.build_ivfpq_index(emb, p_full, nlist=16, codebooks=cb,
-                                 pivots=pv)
-    exp = sorted((r.q_id, r.rnk, r.vec_id, r.adist) for r in
-                 similarity.probe_ivfpq_index(spark, p_full, queries,
-                                              k=10, nprobe=4).collect())
-    assert got == exp and len(got) == 40

@@ -141,25 +141,6 @@ def test_geodetic_range_equals_exhaustive(spark, kind):
     assert got == exp
 
 
-def test_distributed_geo_knn_equals_driver_planned(spark):
-    """Large-Q path (queries as a Spark DataFrame, planner in
-    mapInPandas) must produce exactly the driver-planned results."""
-    from mbrngq_spark.operators.geodetic import geodetic_knn_distributed
-
-    rng = np.random.default_rng(19)
-    docs = spark.createDataFrame(_corpus(rng, "uniform", n=5000))
-    qpd = pd.DataFrame({
-        "query_id": np.arange(300),
-        "qlat": rng.uniform(-90, 90, 300),
-        "qlon": rng.uniform(-180, 180, 300)})
-    a = geodetic_knn(spark, docs, qpd, k=5, res=5).collect()
-    qdf = spark.createDataFrame(qpd).repartition(7)
-    b = geodetic_knn_distributed(spark, docs, qdf, k=5, res=5).collect()
-    ka = sorted((r.query_id, r.rnk, r.doc_id, r.dist_m) for r in a)
-    kb = sorted((r.query_id, r.rnk, r.doc_id, r.dist_m) for r in b)
-    assert ka == kb
-
-
 def test_geodetic_empty_and_tiny_corpora(spark):
     """Empty corpus → empty result (no empty-pandas schema-inference
     crash — CLAUDE.md footgun); corpus smaller than k → all docs
@@ -232,76 +213,6 @@ def test_geo_ngq_empty_category(spark):
     q = pd.DataFrame({"query_id": [0], "qlat": [0.0], "qlon": [0.0]})
     out = geodetic_nearest_group(spark, docs, q, m=3, k=3, L=4, res=4)
     assert out.count() == 0
-
-
-def test_distributed_geo_range_equals_driver_planned(spark):
-    """r4 verdict item 4: large-Q parity for the spherical range query —
-    10k distributed queries must match the driver-planned path row for
-    row."""
-    from mbrngq_spark.operators.geodetic import (
-        geodetic_range, geodetic_range_distributed)
-
-    rng = np.random.default_rng(1234)
-    docs = spark.createDataFrame(_corpus(rng, "uniform", n=3000))
-    nq = 10_000
-    qpd = pd.DataFrame({
-        "query_id": np.arange(nq),
-        "qlat": rng.uniform(-90, 90, nq),
-        "qlon": rng.uniform(-180, 180, nq)})
-    radius = 300_000.0
-    a = geodetic_range(spark, docs, qpd, radius, res=4).collect()
-    qdf = spark.createDataFrame(qpd).repartition(9)
-    b = geodetic_range_distributed(spark, docs, qdf, radius, res=4).collect()
-    ka = sorted((r.query_id, r.doc_id, r.dist_m) for r in a)
-    kb = sorted((r.query_id, r.doc_id, r.dist_m) for r in b)
-    assert ka == kb
-    assert len(ka) > 0
-
-
-@pytest.mark.parametrize("kind", ["uniform", "polar"])
-def test_distributed_geo_pairs_equals_driver_planned(spark, kind):
-    """r4 verdict item 4: the ε-join with DISTRIBUTED cell-pair planning
-    (mapInPandas over probe-cell batches) equals the driver-planned
-    path."""
-    from mbrngq_spark.operators.geodetic import (
-        geodetic_pairs, geodetic_pairs_distributed)
-
-    rng = np.random.default_rng(hash(kind) % 2**31 + 99)
-    docs = spark.createDataFrame(_corpus(rng, kind, n=600))
-    eps = 400_000.0
-    a = geodetic_pairs(spark, docs, eps, res=4).collect()
-    b = geodetic_pairs_distributed(spark, docs, eps, res=4).collect()
-    ka = sorted((r.a_id, r.b_id, r.dist_m) for r in a)
-    kb = sorted((r.a_id, r.b_id, r.dist_m) for r in b)
-    assert ka == kb
-    assert len(ka) > 0
-
-
-def test_distributed_geo_ngq_equals_driver_planned(spark):
-    """Large-Q parity for the spherical NGQ: distributed planning must
-    match the driver-planned path row for row."""
-    from mbrngq_spark.operators.geodetic import (
-        geodetic_nearest_group, geodetic_nearest_group_distributed)
-
-    rng = np.random.default_rng(4242)
-    docs_pd = _corpus(rng, "uniform", n=1200)
-    docs_pd["category"] = np.arange(len(docs_pd)) % 3
-    docs = spark.createDataFrame(docs_pd)
-    nq = 500
-    qpd = pd.DataFrame({
-        "query_id": np.arange(nq),
-        "qlat": rng.uniform(-90, 90, nq),
-        "qlon": rng.uniform(-180, 180, nq)})
-    a = geodetic_nearest_group(spark, docs, qpd, m=3, k=3, L=4,
-                               res=4).collect()
-    qdf = spark.createDataFrame(qpd).repartition(7)
-    b = geodetic_nearest_group_distributed(spark, docs, qdf, m=3, k=3,
-                                           L=4, res=4).collect()
-    ka = sorted((r.query_id, r.group_rank, r.members, r.min_dist)
-                for r in a)
-    kb = sorted((r.query_id, r.group_rank, r.members, r.min_dist)
-                for r in b)
-    assert ka == kb
 
 
 def test_geodetic_pip_matches_numpy_twin(spark):

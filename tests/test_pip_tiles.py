@@ -109,6 +109,17 @@ def test_tile_assignment_deterministic_total(spark, docs_geo):
     assert 0 <= mx < 4096
 
 
+def test_tile_rollup_res0_is_single_apex_tile(spark, docs_geo):
+    """res=0 is the one-tile pyramid apex, not "use the default res":
+    the rollup is exactly one row holding every doc."""
+    from mbrngq_spark.operators.tiles import tile_rollup
+
+    rows = tile_rollup(docs_geo, res=0).collect()
+    assert len(rows) == 1
+    assert rows[0].tile_id == 0
+    assert rows[0].n_docs == docs_geo.count()
+
+
 def test_tile_cover_matches_halfopen_bruteforce(spark):
     """tile_cover's quantized corner-bin ranges must equal the geometric
     truth: tile [x0, x0+w) × [y0, y0+w) overlaps the closed rect."""

@@ -236,37 +236,6 @@ def main() -> int:
           len(geo_ex) >= 1 and all("query_id" in e for e in geo_ex),
           f"exchanges={geo_ex}")
 
-    # --- geodetic distributed range / ε-join ---------------------------------
-    # large-Q twins: planning must run on executors (ArrowEvalPython /
-    # MapInPandas stage), and every row shuffle stays keyed by the
-    # candidate keys (cell / query_id for range; ca / cb for the ε-join)
-    from mbrngq_spark.operators.geodetic import (
-        geodetic_pairs_distributed, geodetic_range_distributed)
-    qdf_geo = spark.createDataFrame(pd.DataFrame({
-        "query_id": list(range(40)),
-        "qlat": [(i * 7) % 160 - 80.0 for i in range(40)],
-        "qlon": [(i * 37) % 360 - 180.0 for i in range(40)]}))
-    gr = geodetic_range_distributed(spark, docs_ll, qdf_geo, 500_000.0,
-                                    res=5)
-    p = plan_of(gr, execute=True)
-    sections.append(("geodetic range (distributed)", p))
-    check("geo range dist: planner runs on executors (mapInPandas)",
-          "MapInPandas" in p)
-    gr_ex = re.findall(r"Exchange hashpartitioning\(([^)]+)\)", p)
-    check("geo range dist: every row shuffle keyed by cell/query_id",
-          all(("cell" in e) or ("query_id" in e) for e in gr_ex),
-          f"exchanges={gr_ex}")
-    gp = geodetic_pairs_distributed(spark, docs_ll.limit(400), 600_000.0,
-                                    res=4)
-    p = plan_of(gp, execute=True)
-    sections.append(("geodetic pairs (distributed)", p))
-    check("geo pairs dist: cell-pair planning on executors (mapInPandas)",
-          "MapInPandas" in p)
-    gp_ex = re.findall(r"Exchange hashpartitioning\(([^)]+)\)", p)
-    check("geo pairs dist: every row shuffle keyed by ca/cb",
-          all(("ca" in e) or ("cb" in e) for e in gp_ex),
-          f"exchanges={gp_ex}")
-
     # --- BPE training round: partial agg + top-1, never a global sort -----
     from mbrngq_spark.operators.text import pair_counts
     vocab_t = (docs_t
@@ -693,29 +662,6 @@ def main() -> int:
           "≤ K rows/key into the exchange)", "WindowGroupLimit" in p)
     check("kmv: the (key, hash) distinct is map-side partially aggregated",
           "partial" in p.lower())
-
-    # --- IVF-PQ artifact: pruned code scan, map-only ADC ---------------------
-    from mbrngq_spark.operators.similarity import (build_ivfpq_index,
-                                                   probe_ivfpq_index)
-    pq_tmp = tempfile.mkdtemp(prefix="plan_audit_ivfpq_")
-    try:
-        build_ivfpq_index(emb_t, pq_tmp, nlist=16)
-        pr = probe_ivfpq_index(spark, pq_tmp, q_emb, k=5, nprobe=4)
-        p = plan_of(pr, execute=True)
-        sections.append(("persisted IVF-PQ probe", p))
-        check("ivf-pq: probe scan is partition-pruned on pivot (over the "
-              "code-only lists)",
-              "PartitionFilters" in p and "pivot" in
-              p.split("PartitionFilters", 1)[1][:300])
-        check("ivf-pq: ADC is map-only Arrow; the only row exchange is the "
-              "q_id rank",
-              "MapInPandas" in p and all(
-                  "q_id" in e for e in re.findall(
-                      r"Exchange hashpartitioning\(([^)]+)\)", p)))
-        check("ivf-pq: rank is WindowGroupLimit-capped",
-              "WindowGroupLimit" in p)
-    finally:
-        shutil.rmtree(pq_tmp, ignore_errors=True)
 
     # --- index write partition pruning --------------------------------------
     indexed, _ = build_index(docs_geo, IndexLayout())
